@@ -47,15 +47,15 @@ def _store_has_foreign_data(store_dir: str, increment_id: str) -> bool:
     """True iff the store holds parquet rows under any ``increment=``
     partition OTHER than ``increment_id``.
 
-    This is the branch test for operators whose warm path divides by
-    store-derived statistics (the bigram LM): a replay of the very
-    FIRST increment leaves the store non-empty but containing only the
-    current label's own previous output, so the label-excluded LM is
-    empty (V=0, c1 null) and the Laplace denominator is zero — an ANSI
-    DIVIDE_BY_ZERO that would crash-loop an at-least-once foreachBatch
-    restart. Such a replay must take the cold-start branch, exactly as
-    the original run did. Partition labels are %-unescaped to match
-    Spark's partition-path escaping."""
+    This is every increment's cold/warm branch test: a replay of the
+    very FIRST increment leaves the store non-empty but containing only
+    the current label's own previous output, so the label-excluded
+    known side is empty. For the bigram LM that empty side would mean
+    V=0 and a zero Laplace denominator — an ANSI DIVIDE_BY_ZERO that
+    would crash-loop an at-least-once foreachBatch restart. Such a
+    replay must take the cold-start branch, exactly as the original run
+    did. Partition labels are %-unescaped to match Spark's
+    partition-path escaping."""
     if not os.path.isdir(store_dir):
         return False
     from urllib.parse import unquote
@@ -70,6 +70,32 @@ def _store_has_foreign_data(store_dir: str, increment_id: str) -> bool:
             if any(f.endswith(".parquet") for f in files):
                 return True
     return False
+
+
+def _foreign_rows(
+    spark: SparkSession, store_dir: str, increment_id: str
+) -> DataFrame | None:
+    """The rows of every label except ``increment_id`` — the KNOWN side
+    of an increment — or None when there are none. Excluding the own
+    label is the replay rule: a retried increment recomputes its
+    contribution instead of seeing its first attempt as foreign."""
+    if not _store_has_foreign_data(store_dir, increment_id):
+        return None
+    return spark.read.parquet(store_dir).filter(F.col("increment") != increment_id)
+
+
+def _write_label(df: DataFrame, store_dir: str, increment_id: str) -> None:
+    """Write ``df`` as label ``increment_id``'s partition with overwrite:
+    dynamic partition overwrite (a per-write option, never a session
+    conf) replaces that one partition and leaves every other label
+    untouched, so a replay rewrites its own rows instead of appending."""
+    (
+        df.withColumn("increment", F.lit(increment_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("increment")
+        .parquet(store_dir)
+    )
 
 
 def release_checkpoint(*dfs: DataFrame) -> None:
@@ -112,17 +138,11 @@ def dedup_increment(
         .filter(F.col(id_col) == F.col("_keep"))
         .drop("_keep")
     )
-    if _store_has_data(store_dir):
-        # exclude THIS increment's own prior digests: a retried/replayed
-        # increment must recompute its contribution (and overwrite its
-        # partition), not see its first attempt as foreign duplicates
-        known = (
-            spark.read.parquet(store_dir)
-            .filter(F.col("increment") != increment_id)
-            .select("content_md5")
-            .distinct()
+    known = _foreign_rows(spark, store_dir, increment_id)
+    if known is not None:
+        fresh = in_inc.join(
+            known.select("content_md5").distinct(), "content_md5", "left_anti"
         )
-        fresh = in_inc.join(known, "content_md5", "left_anti")
     else:
         fresh = in_inc
     # SNAPSHOT before touching the store: the fresh-set's plan reads
@@ -130,14 +150,7 @@ def dedup_increment(
     # would see its own digests as "known" and return empty.
     # localCheckpoint cuts the lineage at materialized partitions.
     fresh = fresh.localCheckpoint(eager=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        fresh.select("content_md5")
-        .withColumn("increment", F.lit(increment_id))
-        .write.mode("overwrite")
-        .partitionBy("increment")
-        .parquet(store_dir)
-    )
+    _write_label(fresh.select("content_md5"), store_dir, increment_id)
     return fresh
 
 
@@ -242,12 +255,9 @@ def minhash_increment(
                 idc, F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
             )
 
-        if _store_has_data(store_dir):
-            sig_old = (
-                spark.read.parquet(store_dir)
-                .filter(F.col("increment") != increment_id)
-                .select("doc_id", *mh_cols)
-            )
+        known = _foreign_rows(spark, store_dir, increment_id)
+        if known is not None:
+            sig_old = known.select("doc_id", *mh_cols)
             cand = (
                 banded(sig_new, "new_id")
                 .join(banded(sig_old, "old_id"), ["band", "key"])
@@ -280,15 +290,12 @@ def minhash_increment(
 
         fresh = fresh.localCheckpoint(eager=True)  # snapshot before store write
         matches = matches.localCheckpoint(eager=True)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            # register the FRESH docs' signatures; reuse sig_new (semi-join)
-            # instead of re-shingling the subset
-            sig_new.join(fresh.select(id_col), id_col, "left_semi")
-            .withColumn("increment", F.lit(increment_id))
-            .write.mode("overwrite")
-            .partitionBy("increment")
-            .parquet(store_dir)
+        # register the FRESH docs' signatures; reuse sig_new (semi-join)
+        # instead of re-shingling the subset
+        _write_label(
+            sig_new.join(fresh.select(id_col), id_col, "left_semi"),
+            store_dir,
+            increment_id,
         )
         return fresh, matches
     finally:
@@ -394,12 +401,9 @@ def embedding_increment(
     )
     new_rows = _embedding_store_rows(kept, id_col, vec_col)
 
-    if _store_has_data(store_dir):
-        old = (
-            spark.read.parquet(store_dir)
-            .filter(F.col("increment") != increment_id)
-            .select("vec_id", "mn", "scale", "codes", "buckets")
-        )
+    known = _foreign_rows(spark, store_dir, increment_id)
+    if known is not None:
+        old = known.select("vec_id", "mn", "scale", "codes", "buckets")
         nb = new_rows.select(
             F.col("vec_id").alias("new_id"),
             F.posexplode("buckets").alias("tbl", "bucket"),
@@ -446,13 +450,10 @@ def embedding_increment(
 
     fresh = fresh.localCheckpoint(eager=True)  # snapshot before store write
     matches = matches.localCheckpoint(eager=True)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        new_rows.join(fresh.select(id_col), "vec_id", "left_semi")
-        .withColumn("increment", F.lit(increment_id))
-        .write.mode("overwrite")
-        .partitionBy("increment")
-        .parquet(store_dir)
+    _write_label(
+        new_rows.join(fresh.select(id_col), "vec_id", "left_semi"),
+        store_dir,
+        increment_id,
     )
     return fresh, matches
 
@@ -485,7 +486,7 @@ def bigram_lm_increment(
     Policy edges: an EMPTY store accepts everything (no LM to judge
     against yet — the first crawl drop defines the corpus), and "empty"
     is judged EXCLUDING the current increment's own label
-    (:func:`_store_has_foreign_data`) so an at-least-once replay of the
+    (:func:`_foreign_rows`) so an at-least-once replay of the
     very first increment re-takes the cold-start branch instead of
     dividing by an empty LM's zero vocabulary; docs too
     short to produce a bigram are accepted (the stateless token-floor
@@ -507,13 +508,9 @@ def bigram_lm_increment(
 
     dbc = doc_bigram_counts(new_docs, text_col=text_col).persist()
     try:
-        if _store_has_foreign_data(store_dir, increment_id):
-            lm12 = (
-                spark.read.parquet(store_dir)
-                .filter(F.col("increment") != increment_id)
-                .groupBy("w1", "w2")
-                .agg(F.sum("c").alias("c12"))
-            )
+        known = _foreign_rows(spark, store_dir, increment_id)
+        if known is not None:
+            lm12 = known.groupBy("w1", "w2").agg(F.sum("c").alias("c12"))
             lm1 = lm12.groupBy("w1").agg(F.sum("c12").alias("c1"))
             vsz = lm12.agg(
                 F.countDistinct("w2").cast("long").alias("vsz")
@@ -574,17 +571,12 @@ def bigram_lm_increment(
         # caller's multiple consumers)
         accepted = accepted.localCheckpoint(eager=True)
         scored = scored.localCheckpoint(eager=True)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        (
+        _write_label(
             dbc.join(accepted.select(id_col), id_col, "left_semi")
             .groupBy("w1", "w2")
-            .agg(F.sum("c").alias("c"))
-            .withColumn("increment", F.lit(increment_id))
-            .write.mode("overwrite")
-            .partitionBy("increment")
-            .parquet(store_dir)
+            .agg(F.sum("c").alias("c")),
+            store_dir,
+            increment_id,
         )
         return accepted, scored
     finally:

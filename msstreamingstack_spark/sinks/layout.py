@@ -43,15 +43,19 @@ def write_partitioned(
 ) -> None:
     """Write ``df`` hive-partitioned by ``partition_cols``.
 
-    ``dynamic=True`` sets ``partitionOverwriteMode=dynamic`` so an
+    ``dynamic=True`` writes with ``partitionOverwriteMode=dynamic`` so an
     overwrite only replaces the partitions present in ``df`` — the
     idempotent daily-backfill pattern (re-running one day's job never
-    truncates the other 364 directories).
+    truncates the other 364 directories); ``dynamic=False`` truncates
+    the whole table. The mode is a per-write option, never a session
+    conf, so it cannot leak into unrelated writes.
     """
-    spark = df.sparkSession
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    (
+        df.write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def events_partitioned_by_day(

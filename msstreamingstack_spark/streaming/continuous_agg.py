@@ -40,7 +40,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from msstreamingstack_spark.streaming.pipeline import read_event_stream
+from msstreamingstack_spark.streaming.pipeline import (
+    read_event_stream,
+    start_foreach_batch,
+)
 
 MV_COLS = ("min_bucket", "event_type", "n", "sv")
 
@@ -84,7 +87,6 @@ def upsert_mv(updates: DataFrame, mv_dir: str) -> None:
         buckets = [r[0] for r in updates.select("min_bucket").distinct().collect()]
         if not buckets:
             return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         out = updates.select(*MV_COLS)
         if _mv_exists(mv_dir):
             carried = (
@@ -107,7 +109,12 @@ def upsert_mv(updates: DataFrame, mv_dir: str) -> None:
             # mutating its stores). The snapshot is a few changed
             # minute-buckets per micro-batch — small by construction.
             out = out.localCheckpoint(eager=True)
-        out.write.mode("overwrite").partitionBy("min_bucket").parquet(mv_dir)
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("min_bucket")
+            .parquet(mv_dir)
+        )
     finally:
         updates.unpersist()
 
@@ -134,14 +141,13 @@ def run_continuous_agg(
     events = read_event_stream(spark, source_path, max_files_per_trigger)
     partials = minutely_partials(events, watermark_delay)
 
-    writer = (
-        partials.writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(lambda df, _bid: upsert_mv(df, mv_dir))
+    return start_foreach_batch(
+        partials,
+        checkpoint_dir,
+        lambda df, _bid: upsert_mv(df, mv_dir),
+        "update",
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_mv(spark: SparkSession, mv_dir: str) -> DataFrame:

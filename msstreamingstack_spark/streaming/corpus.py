@@ -26,7 +26,11 @@ Stage order is the scale argument:
 
 from __future__ import annotations
 
+import hashlib
 import os
+from collections.abc import Callable
+from functools import partial, reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -36,13 +40,24 @@ from msstreamingstack_spark.functions.text import (
 )
 from msstreamingstack_spark.operators.dedup import (
     DECONTAM_FRAC_T,
+    NGRAM13_N,
     doc_shingle_hashes,
+    positional_ngram_hashes,
+)
+from msstreamingstack_spark.operators.incremental import (
+    bigram_lm_increment,
+    compact_store,
+    dedup_increment,
+    minhash_increment,
+    release_checkpoint,
 )
 from msstreamingstack_spark.schemas import DOCUMENTS_SCHEMA
 from msstreamingstack_spark.session import apply_runtime_confs
+from msstreamingstack_spark.streaming.pipeline import start_foreach_batch
 
 MIN_TOKENS = 5
 MIN_DISTINCT_RATIO = 0.3
+COLS = ["doc_id", "text", "lang", "source", "n_chars"]  # the sink columns
 
 # Marker column carried from the reader to the gate: True = the source
 # line failed to parse. The gate turns it into gate_fail="corrupt_line"
@@ -112,6 +127,123 @@ def quality_gate(docs: DataFrame) -> DataFrame:
     return docs.withColumn("gate_fail", reason)
 
 
+# ---------------------------------------------------------------------------
+# Reject stages. Each maps the docs every earlier stage kept to
+# (kept, rejected, checkpointed frames to release after the sinks run);
+# run_corpus_ingest's loop owns the reject tag, the union and the label.
+# ---------------------------------------------------------------------------
+class _RejectStage(NamedTuple):
+    reason: str  # the reject_reason its rejects carry
+    split: Callable  # (docs, increment label) -> (kept, rejected, checkpoints)
+    store_dir: str | None = None  # increment store folded by compact_every
+    compact_agg: str | None = None
+
+
+def _contamination_stage(eval_docs: DataFrame, frac_threshold: float) -> _RejectStage:
+    """Shingle-overlap fraction against the eval set (static side
+    persisted once, broadcast per batch)."""
+    eval_h = (
+        doc_shingle_hashes(eval_docs, persist=False)
+        .select("h")
+        .distinct()
+        .persist()
+    )
+    eval_h.count()  # materialize before the stream starts
+
+    def split(docs: DataFrame, _label: str):
+        sh = doc_shingle_hashes(docs, persist=False)
+        n_sh = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+        ov = (
+            sh.join(F.broadcast(eval_h), "h")
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("n_overlap"))
+        )
+        scored = (
+            docs.join(n_sh, "doc_id", "left")
+            .join(ov, "doc_id", "left")
+            .withColumn(
+                "overlap_frac",
+                F.when(
+                    F.coalesce(F.col("n_shingles"), F.lit(0)) > 0,
+                    F.coalesce(F.col("n_overlap"), F.lit(0)).cast("double")
+                    / F.col("n_shingles").cast("double"),
+                ).otherwise(F.lit(0.0)),
+            )
+        )
+        return (
+            scored.filter(F.col("overlap_frac") < frac_threshold).select(*COLS),
+            scored.filter(F.col("overlap_frac") >= frac_threshold),
+            (),
+        )
+
+    return _RejectStage("contaminated", split)
+
+
+def _verbatim_stage(eval_docs: DataFrame, n: int | None) -> _RejectStage:
+    """Any full ``n``-word gram shared with the eval set (static side
+    persisted once, broadcast per batch)."""
+    n = n or NGRAM13_N
+    ev13 = positional_ngram_hashes(eval_docs, n=n).select("h").distinct().persist()
+    ev13.count()
+
+    def split(docs: DataFrame, _label: str):
+        dirty = (
+            positional_ngram_hashes(docs, n=n)
+            .join(F.broadcast(ev13), "h")
+            .select("doc_id")
+            .distinct()
+        )
+        return (
+            docs.join(dirty, "doc_id", "left_anti"),
+            docs.join(dirty, "doc_id", "left_semi"),
+            (),
+        )
+
+    return _RejectStage("contaminated_verbatim", split)
+
+
+def _ft_stage(min_logit: float) -> _RejectStage:
+    """Pinned fastText-style langid: keep docs with ft_logit > min_logit."""
+    from msstreamingstack_spark.operators.textclf import score_pinned
+
+    def split(docs: DataFrame, _label: str):
+        keep_ids = (
+            score_pinned(docs)
+            .filter(F.col("ft_logit") > F.lit(min_logit))
+            .select("doc_id")
+        )
+        return (
+            docs.join(keep_ids, "doc_id", "left_semi"),
+            docs.join(keep_ids, "doc_id", "left_anti"),
+            (),
+        )
+
+    return _RejectStage("nontarget_lang_ft", split)
+
+
+def _store_stage(
+    reason: str,
+    increment: Callable,
+    store_dir: str,
+    compact_agg: str | None = None,
+) -> _RejectStage:
+    """A persisted increment store (operators/incremental.py): the
+    increment's first frame is the kept set, the rest of the batch is
+    rejected, and every frame it returns is held for release."""
+
+    def split(docs: DataFrame, label: str):
+        out = increment(docs, store_dir, increment_id=label)
+        checkpoints = out if isinstance(out, tuple) else (out,)
+        fresh = checkpoints[0]
+        return (
+            fresh.select(*COLS),
+            docs.join(fresh.select("doc_id"), "doc_id", "left_anti"),
+            checkpoints,
+        )
+
+    return _RejectStage(reason, split, store_dir, compact_agg)
+
+
 def run_corpus_ingest(
     spark: SparkSession,
     source_path: str,
@@ -137,6 +269,16 @@ def run_corpus_ingest(
     bpe_tokens: bool = False,
 ):
     """Launch the ingest query; returns the StreamingQuery.
+
+    Every doc lands in exactly one of accept / reject / watermark-
+    deduped. A rejected doc carries the reason of the FIRST stage that
+    rejects it, in this order: the stateless gates (``corrupt_line``,
+    ``too_short``, ``too_repetitive``), ``contaminated``, then the
+    optional ``contaminated_verbatim`` (``ngram13_gate``),
+    ``nontarget_lang_ft`` (``ft_gate``), ``store_duplicate``
+    (``digest_store_dir``), ``near_duplicate`` (``neardup_store_dir``)
+    and ``low_quality_lm`` (``lm_store_dir``). Each stage sees only
+    the docs every earlier stage kept.
 
     ``eval_docs`` is the static benchmark set; its distinct shingle
     hashes are computed ONCE here (not per batch) and broadcast into
@@ -186,21 +328,17 @@ def run_corpus_ingest(
 
     ``ft_gate`` (optional) screens each batch through the PINNED
     fastText-style classifier (operators/textclf.py) and rejects docs
-    with ``ft_logit <= ft_min_logit`` as ``nontarget_lang_ft`` — the
-    CCNet-ordered langid stage. It runs BEFORE the store stages:
-    stateless model serving (a broadcast B-row weight table) is the
+    with ``ft_logit <= ft_min_logit`` — the CCNet-ordered langid
+    stage, BEFORE the store stages: stateless model serving is the
     cheapest gate after decontamination, so non-target docs never pay
     a store lookup or register state.
 
     ``ngram13_gate`` (optional) adds the VERBATIM decontamination
     mode in-stream (the batch ``ngram_contamination`` kernel): docs
     sharing ANY full ``ngram13_n``-word n-gram with the eval set are
-    rejected as ``contaminated_verbatim`` — the long-quote leak the
-    aggregate overlap fraction dilutes away inside a big doc. Same
-    static-side discipline as the shingle set: the eval gram hashes
-    are computed once, persisted, and broadcast into every batch's
-    semi-join; per batch the cost is one map-local gram explode over
-    the surviving docs.
+    rejected — the long-quote leak the aggregate overlap fraction
+    dilutes away inside a big doc. Like the shingle set, the eval gram
+    hashes are computed once and broadcast into every batch.
 
     ``bpe_tokens`` (optional) annotates every ACCEPTED doc with its
     pinned-tokenizer subword count (``n_bpe_tokens`` column in the
@@ -216,29 +354,22 @@ def run_corpus_ingest(
     crash-replay idempotence is preserved while store reads stop
     paying listing overhead linear in batch count.
     """
-    # static side, computed once and persisted across micro-batches
-    eval_h = (
-        doc_shingle_hashes(eval_docs, persist=False)
-        .select("h")
-        .distinct()
-        .persist()
-    )
-    eval_h.count()  # materialize before the stream starts
-    ev13 = None
+    # reject stages in precedence order, their static sides built once
+    stages = [_contamination_stage(eval_docs, frac_threshold)]
     if ngram13_gate:
-        from msstreamingstack_spark.operators.dedup import (
-            NGRAM13_N,
-            positional_ngram_hashes,
+        stages.append(_verbatim_stage(eval_docs, ngram13_n))
+    if ft_gate:
+        stages.append(_ft_stage(ft_min_logit))
+    if digest_store_dir is not None:
+        stages.append(
+            _store_stage("store_duplicate", dedup_increment, digest_store_dir, "dedup")
         )
-
-        ngram13_n = ngram13_n or NGRAM13_N
-        ev13 = (
-            positional_ngram_hashes(eval_docs, n=ngram13_n)
-            .select("h")
-            .distinct()
-            .persist()
-        )
-        ev13.count()
+    if neardup_store_dir is not None:
+        nd = partial(minhash_increment, threshold=neardup_threshold)
+        stages.append(_store_stage("near_duplicate", nd, neardup_store_dir))
+    if lm_store_dir is not None:
+        lm = partial(bigram_lm_increment, max_bits=lm_max_bits)
+        stages.append(_store_stage("low_quality_lm", lm, lm_store_dir, "counts"))
 
     gated = quality_gate(
         read_document_stream(spark, source_path, max_files_per_trigger, fmt=fmt)
@@ -269,142 +400,33 @@ def run_corpus_ingest(
     rejected_gate = gated.filter(F.col("gate_fail").isNotNull())
     # one stream, two branches unioned so a single query/checkpoint
     # feeds both sinks (reference anti-pattern: one query per sink)
-    unioned = passed.select(
-        "doc_id", "text", "lang", "source", "n_chars", "gate_fail"
-    ).unionByName(
-        rejected_gate.select(
-            "doc_id", "text", "lang", "source", "n_chars", "gate_fail"
-        )
+    unioned = passed.select(*COLS, "gate_fail").unionByName(
+        rejected_gate.select(*COLS, "gate_fail")
     )
 
     # stable per-checkpoint run label: batch replays from the same
-    # checkpoint re-use their digest-store partition (idempotent);
-    # a fresh checkpoint gets fresh labels and still sees all prior
-    # digests as foreign
-    import hashlib
-
-    run_label = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    # checkpoint re-use their store partitions (idempotent); a fresh
+    # checkpoint gets fresh labels and still sees all prior rows as
+    # foreign
+    run_label = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
 
     def fan_out(df: DataFrame, batch_id: int) -> None:
+        label = f"{run_label}-b{batch_id:09d}"
         df.persist()
-        checkpoints = []  # released after the sinks consume them
+        held = []  # checkpointed frames, released after the sinks consume them
         try:
-            bad = df.filter(F.col("gate_fail").isNotNull()).withColumn(
-                "reject_reason", F.col("gate_fail")
-            )
-            ok = df.filter(F.col("gate_fail").isNull())
-            sh = doc_shingle_hashes(ok, persist=False)
-            n_sh = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-            ov = (
-                sh.join(F.broadcast(eval_h), "h")
-                .groupBy("doc_id")
-                .agg(F.count("*").alias("n_overlap"))
-            )
-            scored = (
-                ok.join(n_sh, "doc_id", "left")
-                .join(ov, "doc_id", "left")
-                .withColumn(
-                    "overlap_frac",
-                    F.when(
-                        F.coalesce(F.col("n_shingles"), F.lit(0)) > 0,
-                        F.coalesce(F.col("n_overlap"), F.lit(0)).cast("double")
-                        / F.col("n_shingles").cast("double"),
-                    ).otherwise(F.lit(0.0)),
+            rejects = [
+                df.filter(F.col("gate_fail").isNotNull()).select(
+                    *COLS, F.col("gate_fail").alias("reject_reason")
                 )
-            )
-            cols = ["doc_id", "text", "lang", "source", "n_chars"]
-            accepted = scored.filter(
-                F.col("overlap_frac") < frac_threshold
-            ).select(*cols)
-            contaminated = scored.filter(
-                F.col("overlap_frac") >= frac_threshold
-            ).select(*cols, F.lit("contaminated").alias("reject_reason"))
-            verbatim_rejects = None
-            if ev13 is not None:
-                from msstreamingstack_spark.operators.dedup import (
-                    positional_ngram_hashes,
+            ]
+            accepted = df.filter(F.col("gate_fail").isNull())
+            for stage in stages:
+                accepted, rejected, checkpoints = stage.split(accepted, label)
+                held.extend(checkpoints)
+                rejects.append(
+                    rejected.select(*COLS, F.lit(stage.reason).alias("reject_reason"))
                 )
-
-                dirty13 = (
-                    positional_ngram_hashes(accepted, n=ngram13_n)
-                    .join(F.broadcast(ev13), "h")
-                    .select("doc_id")
-                    .distinct()
-                )
-                verbatim_rejects = accepted.join(
-                    dirty13, "doc_id", "left_semi"
-                ).select(
-                    *cols,
-                    F.lit("contaminated_verbatim").alias("reject_reason"),
-                )
-                accepted = accepted.join(dirty13, "doc_id", "left_anti")
-            ft_rejects = None
-            if ft_gate:
-                from msstreamingstack_spark.operators.textclf import (
-                    score_pinned,
-                )
-
-                keep_ids = score_pinned(accepted).filter(
-                    F.col("ft_logit") > F.lit(ft_min_logit)
-                ).select("doc_id")
-                ft_rejects = accepted.join(
-                    keep_ids, "doc_id", "left_anti"
-                ).select(
-                    *cols, F.lit("nontarget_lang_ft").alias("reject_reason")
-                )
-                accepted = accepted.join(keep_ids, "doc_id", "left_semi")
-            store_dups = None
-            if digest_store_dir is not None:
-                from msstreamingstack_spark.operators.incremental import (
-                    dedup_increment,
-                )
-
-                fresh = dedup_increment(
-                    accepted,
-                    digest_store_dir,
-                    increment_id=f"{run_label}-b{batch_id:09d}",
-                )
-                checkpoints.append(fresh)
-                store_dups = accepted.join(
-                    fresh.select("doc_id"), "doc_id", "left_anti"
-                ).select(*cols, F.lit("store_duplicate").alias("reject_reason"))
-                accepted = fresh.select(*cols)
-            neardup_rejects = None
-            if neardup_store_dir is not None:
-                from msstreamingstack_spark.operators.incremental import (
-                    minhash_increment,
-                )
-
-                nd_fresh, nd_matches = minhash_increment(
-                    accepted,
-                    neardup_store_dir,
-                    increment_id=f"{run_label}-b{batch_id:09d}",
-                    threshold=neardup_threshold,
-                )
-                checkpoints.extend((nd_fresh, nd_matches))
-                neardup_rejects = accepted.join(
-                    nd_fresh.select("doc_id"), "doc_id", "left_anti"
-                ).select(*cols, F.lit("near_duplicate").alias("reject_reason"))
-                accepted = nd_fresh.select(*cols)
-            lm_rejects = None
-            if lm_store_dir is not None:
-                from msstreamingstack_spark.operators.incremental import (
-                    bigram_lm_increment,
-                )
-
-                lm_ok, lm_scored = bigram_lm_increment(
-                    accepted,
-                    lm_store_dir,
-                    increment_id=f"{run_label}-b{batch_id:09d}",
-                    max_bits=lm_max_bits,
-                )
-                checkpoints.extend((lm_ok, lm_scored))
-                lm_rejects = accepted.join(
-                    lm_ok.select("doc_id"), "doc_id", "left_anti"
-                ).select(*cols, F.lit("low_quality_lm").alias("reject_reason"))
-                accepted = lm_ok.select(*cols)
             if bpe_tokens:
                 # true subword token accounting on the accepted set:
                 # the pinned tokenizer applied per batch (distinct
@@ -412,14 +434,10 @@ def run_corpus_ingest(
                 # bpe_segment_pinned shape, never per occurrence), so
                 # downstream mixing/budget stages read real token
                 # counts instead of whitespace approximations
-                from msstreamingstack_spark.operators.bpe import (
-                    bpe_segment_pinned,
-                )
+                from msstreamingstack_spark.operators.bpe import bpe_segment_pinned
 
                 accepted = accepted.join(
-                    bpe_segment_pinned(accepted).select(
-                        "doc_id", "n_bpe_tokens"
-                    ),
+                    bpe_segment_pinned(accepted).select("doc_id", "n_bpe_tokens"),
                     "doc_id",
                 )
             # batch-id-scoped overwrite, not raw append: foreachBatch is
@@ -429,18 +447,7 @@ def run_corpus_ingest(
             accepted.write.mode("overwrite").parquet(
                 os.path.join(accept_dir, f"batch_id={batch_id}")
             )
-            rejects = bad.select(*cols, "reject_reason").unionByName(contaminated)
-            if verbatim_rejects is not None:
-                rejects = rejects.unionByName(verbatim_rejects)
-            if ft_rejects is not None:
-                rejects = rejects.unionByName(ft_rejects)
-            if store_dups is not None:
-                rejects = rejects.unionByName(store_dups)
-            if neardup_rejects is not None:
-                rejects = rejects.unionByName(neardup_rejects)
-            if lm_rejects is not None:
-                rejects = rejects.unionByName(lm_rejects)
-            rejects.write.mode("overwrite").parquet(
+            reduce(DataFrame.unionByName, rejects).write.mode("overwrite").parquet(
                 os.path.join(reject_dir, f"batch_id={batch_id}")
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
@@ -451,35 +458,21 @@ def run_corpus_ingest(
                 # were folded would see its first attempt as foreign.
                 # Older labels are commit-protected, so folding them
                 # under the live stream is sound (compact_store docs).
-                from msstreamingstack_spark.operators.incremental import (
-                    compact_store,
-                )
-
-                cur = (f"{run_label}-b{batch_id:09d}",)
-                for sd, agg in (
-                    (digest_store_dir, "dedup"),
-                    (neardup_store_dir, None),
-                    (lm_store_dir, "counts"),
-                ):
-                    if sd is not None:
-                        compact_store(spark, sd, agg=agg, exclude_labels=cur)
+                for stage in stages:
+                    if stage.store_dir is not None:
+                        compact_store(
+                            spark,
+                            stage.store_dir,
+                            agg=stage.compact_agg,
+                            exclude_labels=(label,),
+                        )
         finally:
             df.unpersist()
-            if checkpoints:
-                # both sinks are written — the increments' checkpoint
-                # blocks have no consumers left; free them now instead
-                # of leaking one set per micro-batch in continuous mode
-                from msstreamingstack_spark.operators.incremental import (
-                    release_checkpoint,
-                )
+            # both sinks are written — the increments' checkpoint
+            # blocks have no consumers left; free them now instead of
+            # leaking one set per micro-batch in continuous mode
+            release_checkpoint(*held)
 
-                release_checkpoint(*checkpoints)
-
-    writer = (
-        unioned.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(fan_out)
+    return start_foreach_batch(
+        unioned, checkpoint_dir, fan_out, "append", available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

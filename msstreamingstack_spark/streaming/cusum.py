@@ -189,7 +189,10 @@ def run_cusum_stream(
     sink discipline). Returns the StreamingQuery."""
     import os
 
-    from msstreamingstack_spark.streaming.pipeline import read_event_stream
+    from msstreamingstack_spark.streaming.pipeline import (
+        read_event_stream,
+        start_foreach_batch,
+    )
 
     events = read_event_stream(spark, source_path, max_files_per_trigger)
     monitored = cusum_monitor(events, refs)
@@ -199,11 +202,4 @@ def run_cusum_stream(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
-        monitored.writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(monitored, checkpoint_dir, sink, "update", available_now)

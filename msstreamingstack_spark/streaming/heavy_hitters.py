@@ -176,7 +176,10 @@ def run_heavy_hitters_stream(
     corpus-ingest sink discipline). Returns the StreamingQuery."""
     import os
 
-    from msstreamingstack_spark.streaming.pipeline import read_event_stream
+    from msstreamingstack_spark.streaming.pipeline import (
+        read_event_stream,
+        start_foreach_batch,
+    )
 
     events = read_event_stream(spark, source_path, max_files_per_trigger)
     sketches = bucketed_sketches(events, key_col, n_buckets, capacity)
@@ -186,11 +189,4 @@ def run_heavy_hitters_stream(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
-        sketches.writeStream.outputMode("update")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(sketches, checkpoint_dir, sink, "update", available_now)

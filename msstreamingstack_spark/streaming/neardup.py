@@ -361,6 +361,7 @@ def run_neardup_stream(
     import os
 
     from msstreamingstack_spark.streaming.corpus import read_document_stream
+    from msstreamingstack_spark.streaming.pipeline import start_foreach_batch
 
     if state_ttl_ms is None and not available_now:
         state_ttl_ms = DEFAULT_STATE_TTL_MS
@@ -374,14 +375,7 @@ def run_neardup_stream(
             os.path.join(out_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
-        verdicts.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(verdicts, checkpoint_dir, sink, "append", available_now)
 
 
 # ---------------------------------------------------------------------------

@@ -145,10 +145,26 @@ def run_pipeline(
         finally:
             df.unpersist()
 
+    return start_foreach_batch(
+        sessioned, checkpoint_dir, fan_out, "append", available_now
+    )
+
+
+def start_foreach_batch(
+    df: DataFrame,
+    checkpoint_dir: str,
+    fn: SinkFn,
+    output_mode: str,
+    available_now: bool,
+):
+    """Start ``df`` as a ``foreachBatch(fn)`` query checkpointed under
+    ``<checkpoint_dir>/cp`` — the one launcher every streaming job in
+    this package uses. ``available_now=True`` drains all pending input
+    then stops; False runs continuously. Returns the StreamingQuery."""
     writer = (
-        sessioned.writeStream.outputMode("append")
+        df.writeStream.outputMode(output_mode)
         .option("checkpointLocation", os.path.join(checkpoint_dir, "cp"))
-        .foreachBatch(fan_out)
+        .foreachBatch(fn)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

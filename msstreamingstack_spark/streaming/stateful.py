@@ -13,8 +13,9 @@ race disappears, and checkpointing gives exactly-once state.
 Session rules (batch-identical to operators/sessionize.py):
   new session ⇔ user unseen ∨ gap > 30 min (strict) ∨ init event
   session_id = "<user>-<session_start_epoch_sec>" (deterministic, F5)
-Cart/category carry: only purchase events move them (T3); new users
-seed cart to 0 (reference :175).
+Cart carry: only purchase events move it (T3); new users seed cart to
+0 (reference :175). The stream has no category input (``prop_k`` is not
+among the sessionizer's columns), so ``ctgry`` keeps its seed.
 """
 
 from __future__ import annotations
@@ -56,15 +57,29 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def make_session_fn(
-    gap_sec: int = DEFAULT_GAP_SEC,
-    init_event_type: str = "signup",
-    purchase_event_type: str = "purchase",
-):
+INIT_EVENT_TYPE = "signup"  # force-splits a session
+PURCHASE_EVENT_TYPE = "purchase"  # moves the cart carry
+
+
+def _events_in_order(pdfs: Iterator[pd.DataFrame]) -> Iterator[Any]:
+    """A group's events of one micro-batch as rows in (ts_sec,
+    event_id) order. A group larger than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` arrives as several
+    Arrow chunks in arbitrary order, so the chunks are concatenated and
+    sorted ONCE — a per-chunk sort would make session boundaries depend
+    on chunk boundaries (the streaming/tws.py rule)."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return iter(())
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    return pdf.sort_values(["ts_sec", "event_id"]).itertuples(index=False)
+
+
+def make_session_fn(gap_sec: int = DEFAULT_GAP_SEC):
     """Build the per-group state-transition function.
 
-    Events inside a batch are sorted by (ts_sec, event_id); state
-    carries across micro-batches via the state store.
+    Events inside a batch are processed in (ts_sec, event_id) order;
+    state carries across micro-batches via the state store.
     """
 
     def fn(
@@ -87,35 +102,32 @@ def make_session_fn(
             new_user = True
 
         out_rows: list[dict] = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_sec", "event_id"])
-            for r in pdf.itertuples(index=False):
-                ts = int(r.ts_sec)
-                split = (
-                    last_ts is None
-                    or (ts - last_ts) > gap_sec
-                    or r.event_type == init_event_type
-                )
-                if split:
-                    session_start = ts
-                if r.event_type == purchase_event_type:
-                    cart_amt = float(r.value)
-                    ctgry = str(r.prop_k % 10) if hasattr(r, "prop_k") else ctgry
-                out_rows.append(
-                    {
-                        "event_id": int(r.event_id),
-                        "user_id": int(user_id),
-                        "ts_sec": ts,
-                        "event_type": r.event_type,
-                        "value": float(r.value),
-                        "session_id": f"{user_id}-{session_start}",
-                        "is_new_user": new_user and n_events == 0 and not out_rows,
-                        "is_new_session": bool(split),
-                        "cart_amt": cart_amt,
-                        "ctgry": ctgry,
-                    }
-                )
-                last_ts = ts
+        for r in _events_in_order(pdfs):
+            ts = int(r.ts_sec)
+            split = (
+                last_ts is None
+                or (ts - last_ts) > gap_sec
+                or r.event_type == INIT_EVENT_TYPE
+            )
+            if split:
+                session_start = ts
+            if r.event_type == PURCHASE_EVENT_TYPE:
+                cart_amt = float(r.value)
+            out_rows.append(
+                {
+                    "event_id": int(r.event_id),
+                    "user_id": int(user_id),
+                    "ts_sec": ts,
+                    "event_type": r.event_type,
+                    "value": float(r.value),
+                    "session_id": f"{user_id}-{session_start}",
+                    "is_new_user": new_user and n_events == 0 and not out_rows,
+                    "is_new_session": bool(split),
+                    "cart_amt": cart_amt,
+                    "ctgry": ctgry,
+                }
+            )
+            last_ts = ts
         n_events += len(out_rows)
         state.update((last_ts, session_start, n_events, cart_amt, ctgry))
         yield pd.DataFrame(out_rows, columns=[f.name for f in OUTPUT_SCHEMA.fields])
@@ -224,27 +236,25 @@ def make_rollup_fn(gap_sec: int = DEFAULT_GAP_SEC):
             n, sv = 0, 0.0
 
         out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts_sec", "event_id"])
-            for r in pdf.itertuples(index=False):
-                ts = int(r.ts_sec)
-                if lt is not None and (ts - lt) > gap_sec:
-                    out.append(
-                        {
-                            "user_id": int(user_id),
-                            "session_start": ss,
-                            "session_end": lt,
-                            "n_events": n,
-                            "sum_value": sv,
-                            "closed_by_timeout": False,
-                        }
-                    )
-                    ss, n, sv = ts, 0, 0.0
-                if lt is None:
-                    ss = ts
-                n += 1
-                sv += float(r.value)
-                lt = ts
+        for r in _events_in_order(pdfs):
+            ts = int(r.ts_sec)
+            if lt is not None and (ts - lt) > gap_sec:
+                out.append(
+                    {
+                        "user_id": int(user_id),
+                        "session_start": ss,
+                        "session_end": lt,
+                        "n_events": n,
+                        "sum_value": sv,
+                        "closed_by_timeout": False,
+                    }
+                )
+                ss, n, sv = ts, 0, 0.0
+            if lt is None:
+                ss = ts
+            n += 1
+            sv += float(r.value)
+            lt = ts
         state.update((ss, lt, n, sv))
         # close the open session once the watermark passes last_ts+gap
         state.setTimeoutTimestamp((lt + gap_sec) * 1000)

@@ -55,9 +55,42 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+# Session confs every test (and fixture) must leave as the session
+# started with them. Operators pass their overwrite mode per write
+# instead of setting it on the session: a leaked ``dynamic`` silently
+# turns every later static overwrite into a dynamic one; a leaked Arrow
+# chunk size re-chunks every later pandas UDF.
+GUARDED_CONFS = (
+    "spark.sql.sources.partitionOverwriteMode",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+)
+_CONF_BASELINE: dict[str, str] = {}  # recorded when the session starts
+
+
+@pytest.fixture(autouse=True)
+def no_session_conf_leak():
+    """Fail a test that leaves a guarded session conf changed, and
+    restore the conf so one leak does not cascade into later tests.
+    Compares against the session's start values, so a leak from a
+    module fixture fails the first test that runs after it."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()  # never starts a session
+    if active is None or not _CONF_BASELINE:
+        return
+    now = {k: active.conf.get(k) for k in _CONF_BASELINE}
+    leaked = {k: (v, now[k]) for k, v in _CONF_BASELINE.items() if now[k] != v}
+    for k, (v, _) in leaked.items():
+        active.conf.set(k, v)
+    if leaked:
+        pytest.fail(f"session confs leaked (start value, now): {leaked}")
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark(app_name="msstreamingstack-tests", cpus=8, shuffle_partitions=8)
+    _CONF_BASELINE.update({k: spark.conf.get(k) for k in GUARDED_CONFS})
     yield spark
 
 

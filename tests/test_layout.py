@@ -179,3 +179,32 @@ def test_retention_sweep_drops_expired_partitions(spark, tmp_path):
 
     # idempotent: second sweep drops nothing
     assert retention_sweep(path, "event_date", cutoff) == []
+
+
+def test_overwrite_mode_never_leaks_into_the_session(spark, tmp_path):
+    """Increment stores and dynamic layout writes pick their partition
+    overwrite mode per write: the session conf is unchanged after
+    ``dedup_increment``, and a later ``write_partitioned(dynamic=False)``
+    still truncates the partitions its frame does not hold."""
+    from msstreamingstack_spark.operators.incremental import dedup_increment
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "delta epsilon zeta")], "doc_id long, text string"
+    )
+    dedup_increment(docs, str(tmp_path / "digests"), increment_id="inc-1")
+    assert spark.conf.get(key) == before
+
+    path = str(tmp_path / "table")
+    write_partitioned(
+        spark.createDataFrame([(1, "a"), (2, "b")], "v long, p string"), path, ["p"]
+    )
+    assert spark.conf.get(key) == before
+    write_partitioned(
+        spark.createDataFrame([(3, "a")], "v long, p string"),
+        path,
+        ["p"],
+        dynamic=False,
+    )
+    assert sorted(r["v"] for r in spark.read.parquet(path).collect()) == [3]

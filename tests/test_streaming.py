@@ -701,3 +701,50 @@ def test_dynamic_gap_session_window_streams(spark, staged_stream_dir, tmp_path):
     assert all(want[k][0] > wm for k in withheld), withheld
     # and the stream DID finalize the overwhelming majority
     assert len(got) >= 0.9 * len(want)
+
+
+def test_sessionizer_sorts_across_arrow_chunks(spark, tmp_path):
+    """A user whose micro-batch spans several Arrow chunks must be
+    sessionized in GLOBAL (ts_sec, event_id) order: with
+    maxRecordsPerBatch=2 one user's six shuffled events arrive as three
+    chunks, and sorting each chunk on its own assigns wrong session
+    ids. The streamed ids must equal the batch sessionizer's."""
+    import pandas as pd
+
+    t0 = 1_700_000_000
+    # three sessions (30-min gap), written in shuffled order
+    ts = [t0, t0 + 60, t0 + 4000, t0 + 4060, t0 + 8000, t0 + 8060]
+    order = [5, 0, 3, 1, 4, 2]
+    src = tmp_path / "in"
+    src.mkdir()
+    rows = pd.DataFrame(
+        {
+            "event_id": [i + 1 for i in order],
+            "ts": [ts[i] * 10**9 for i in order],
+            "user_id": [7] * 6,
+            "event_type": ["view"] * 6,
+            "value": [1.0] * 6,
+            "props": ["{}"] * 6,
+        }
+    )
+    pq.write_table(pa.Table.from_pandas(rows, preserve_index=False), src / "p.parquet")
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        sink = CollectingSink()
+        q = run_pipeline(spark, str(src), str(tmp_path / "cp"), [sink])
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, prev)
+    got = {r["event_id"]: r["session_id"] for r in sink.rows}
+    ev = spark.createDataFrame(
+        [(int(r.event_id), int(r.ts) // 10**9) for r in rows.itertuples()],
+        "event_id long, ts_sec long",
+    ).withColumn("user_id", F.lit(7).cast("long"))
+    want = {
+        r["event_id"]: r["session_id"] for r in sessionize(ev).collect()
+    }
+    assert len(want) == 6 and len(set(want.values())) == 3
+    assert got == want

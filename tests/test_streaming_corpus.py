@@ -799,3 +799,93 @@ def test_bpe_token_annotation_matches_pinned_segmenter(spark, tmp_path):
     }
     assert got == want and set(got) == {1, 2}
     assert all(v > 0 for v in got.values())
+
+
+def test_every_reject_stage_at_once_keeps_precedence(spark, sf_smoke, tmp_path):
+    """All optional reject stages enabled in one ingest (verbatim gate,
+    ft gate, digest + near-dup + LM stores): one planted doc per
+    reason lands with exactly that reason, and docs that two stages
+    would each reject carry the EARLIER stage's reason — an eval copy
+    is contaminated (not contaminated_verbatim), an exact re-crawl is
+    a store_duplicate (not a near_duplicate)."""
+    from msstreamingstack_spark.streaming.corpus import run_corpus_ingest
+
+    # real fixture docs: the pinned classifier scores doc 16 and doc 7
+    # as target-language (ft_logit > 0) and doc 1 as non-target
+    fx = pq.read_table(os.path.join(sf_smoke, "documents.parquet")).to_pandas()
+    text = dict(zip(fx["doc_id"], fx["text"]))
+    seed, base, foreign = text[16], text[7], text[1]
+    toks = seed.split()
+    echo = " ".join(toks[20:50])  # seen bigrams only: cheap under the LM
+    junk = " ".join(toks[::-1][30:60])  # reversed: unseen bigrams
+    quote = "zebra yak xylophone walrus vulture"
+    host = (
+        "one two three four five six seven eight nine ten "
+        + quote
+        + " eleven twelve thirteen fourteen fifteen sixteen"
+    )
+    eval_docs = spark.createDataFrame(
+        [(100, EVAL_TEXT, "en", "bench", len(EVAL_TEXT))],
+        ["doc_id", "text", "lang", "source", "n_chars"],
+    )
+
+    def run(rows, leg):
+        d = tmp_path / f"drops{leg}"
+        d.mkdir()
+        _write_drop(d / "a.parquet", rows, 1_700_000_000 + leg)
+        q = run_corpus_ingest(
+            spark,
+            str(d),
+            eval_docs,
+            str(tmp_path / f"accept{leg}"),
+            str(tmp_path / f"reject{leg}"),
+            checkpoint_dir=str(tmp_path / f"cp{leg}"),
+            digest_store_dir=str(tmp_path / "digests"),
+            neardup_store_dir=str(tmp_path / "sigs"),
+            lm_store_dir=str(tmp_path / "lm"),
+            lm_max_bits=4.4,
+            ft_gate=True,
+            ngram13_gate=True,
+            ngram13_n=5,
+        )
+        q.awaitTermination(180)
+        acc = {
+            r["doc_id"]
+            for r in spark.read.parquet(str(tmp_path / f"accept{leg}")).collect()
+        }
+        rej = {
+            r["doc_id"]: r["reject_reason"]
+            for r in spark.read.parquet(str(tmp_path / f"reject{leg}")).collect()
+        }
+        return acc, rej
+
+    # leg 1 seeds all three stores (the cold LM store accepts everything)
+    assert run([(1, seed), (2, base)], 1) == ({1, 2}, {})
+
+    # leg 2, fresh checkpoint: the in-stream watermark dedup cannot see
+    # leg 1, so only the stores catch the re-crawls
+    acc, rej = run(
+        [
+            (21, "tiny doc"),
+            (22, "a a a a a a"),
+            (23, EVAL_TEXT),  # also holds eval 5-grams
+            (24, host),
+            (25, foreign),
+            (26, seed),  # also a jaccard-1 near-dup of the seed
+            (27, base + " the"),
+            (28, junk),
+            (29, echo),
+        ],
+        2,
+    )
+    assert acc == {29}
+    assert rej == {
+        21: "too_short",
+        22: "too_repetitive",
+        23: "contaminated",
+        24: "contaminated_verbatim",
+        25: "nontarget_lang_ft",
+        26: "store_duplicate",
+        27: "near_duplicate",
+        28: "low_quality_lm",
+    }
