@@ -88,7 +88,6 @@ def _cmd_consume(args: argparse.Namespace) -> int:
     )
 
     spark = get_spark(app_name="msstreamingstack-consume")
-    spark.sparkContext.setLogLevel("WARN")
     if args.rocksdb:
         use_rocksdb_state(spark)
     sinks = []
@@ -522,7 +521,6 @@ def _cmd_ingest(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.streaming.corpus import run_corpus_ingest
 
     spark = get_spark(app_name="msstreamingstack-ingest")
-    spark.sparkContext.setLogLevel("WARN")
     eval_docs = spark.read.parquet(args.eval_parquet)
     if args.eval_every > 1:
         eval_docs = eval_docs.filter(F.col("doc_id") % args.eval_every == 0)
@@ -563,7 +561,6 @@ def _cmd_heavy_hitters(args: argparse.Namespace) -> int:
     )
 
     spark = get_spark(app_name="msstreamingstack-heavy-hitters")
-    spark.sparkContext.setLogLevel("WARN")
     q = run_heavy_hitters_stream(
         spark,
         source_path=args.source,
@@ -598,7 +595,6 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.streaming.neardup import run_neardup_stream
 
     spark = get_spark(app_name="msstreamingstack-neardup")
-    spark.sparkContext.setLogLevel("WARN")
     q = run_neardup_stream(
         spark,
         source_path=args.source,
@@ -632,7 +628,6 @@ def _cmd_dedup_increment(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.session import get_spark
 
     spark = get_spark(app_name="msstreamingstack-dedup-increment")
-    spark.sparkContext.setLogLevel("WARN")
     new_docs = spark.read.parquet(args.docs)
     fresh = dedup_increment(new_docs, args.store, args.label)
     if args.out:
@@ -660,7 +655,6 @@ def _cmd_ann(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.sources.tables import load_table
 
     spark = get_spark(app_name="msstreamingstack-ann")
-    spark.sparkContext.setLogLevel("WARN")
     emb = load_table(spark, args.sf_dir, "embeddings")
     if args.fit:
         fit = ivf_fit_ml if args.ml else ivf_fit
@@ -694,7 +688,6 @@ def _cmd_fit_pinned(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.sources.tables import load_table
 
     spark = get_spark(app_name="msstreamingstack-fit")
-    spark.sparkContext.setLogLevel("WARN")
     if args.model == "textclf":
         from msstreamingstack_spark.operators.textclf import fit_nb_pinned
 
@@ -798,7 +791,6 @@ def _cmd_corpus_build(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.session import get_spark
 
     spark = get_spark(app_name="msstreamingstack-corpus-build")
-    spark.sparkContext.setLogLevel("WARN")
     df = build_pretrain_corpus(
         spark, args.sf_dir, skew_robust=bool(args.skew_robust)
     )
@@ -818,7 +810,6 @@ def _cmd_sql(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.sql_frontend import run_sql
 
     spark = get_spark(app_name="msstreamingstack-sql")
-    spark.sparkContext.setLogLevel("WARN")
     df = run_sql(spark, args.sf_dir, args.query)
     if args.explain:
         df.explain("formatted")
@@ -834,7 +825,6 @@ def _cmd_mv(args: argparse.Namespace) -> int:
     )
 
     spark = get_spark(app_name="msstreamingstack-mv")
-    spark.sparkContext.setLogLevel("WARN")
     q = run_continuous_agg(
         spark,
         args.source,
@@ -855,7 +845,6 @@ def _cmd_compact(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.sinks.layout import compact_parquet
 
     spark = get_spark(app_name="msstreamingstack-compact")
-    spark.sparkContext.setLogLevel("WARN")
     n = compact_parquet(
         spark, args.src, args.dst, target_file_bytes=args.target_mb * 1024 * 1024
     )
@@ -868,7 +857,6 @@ def _cmd_compact_store(args: argparse.Namespace) -> int:
     from msstreamingstack_spark.session import get_spark
 
     spark = get_spark(app_name="msstreamingstack-compact-store")
-    spark.sparkContext.setLogLevel("WARN")
     n = compact_store(spark, args.store, agg=args.agg)
     print(f"compacted increment store {args.store}: {n} rows in base")
     return 0
@@ -892,7 +880,6 @@ def _cmd_export(args: argparse.Namespace) -> int:
     if bad is not None:
         return bad
     spark = get_spark(app_name="msstreamingstack-export")
-    spark.sparkContext.setLogLevel("WARN")
     df = _build_with_skew_mode(spark, args.sf_dir, args.name, mode)
     if args.format == "parquet":
         df.write.mode("overwrite").parquet(args.out)

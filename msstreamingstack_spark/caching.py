@@ -24,15 +24,21 @@ frame a caller somehow still holds is CORRECT under Spark semantics —
 the plan recomputes — so a pathological interleaving costs time, never
 answers.
 
-Streaming/incremental operators do NOT use this: they own their
+Streaming/incremental operators do NOT use slots: they own their
 consumption and release deterministically (`release_checkpoint`,
-returned cache handles — the round-5 discipline).
+returned cache handles — the round-5 discipline). When such an
+operator reuses a registry kernel, it runs it inside
+:func:`released_on_exit`, which keeps the kernel's persists out of the
+session slots and releases them when the operator returns.
 """
 
 from __future__ import annotations
 
 import threading
 import weakref
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -41,6 +47,25 @@ _LOCK = threading.Lock()
 # session -> {slot: DataFrame}; weak on the session so a stopped,
 # dropped SparkSession doesn't pin its frames (or itself) in memory
 _SLOTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# the frames persisted inside the innermost released_on_exit scope
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("cache_scope", default=None)
+
+
+@contextmanager
+def released_on_exit() -> Iterator[None]:
+    """Scope for an operator that owns its consumption: every frame
+    :func:`rotating_persist` persists inside it is held by the scope
+    instead of a session slot, and unpersisted when the scope exits.
+    Materialize what the operator returns (``localCheckpoint``) before
+    leaving the scope."""
+    held: list[DataFrame] = []
+    token = _SCOPE.set(held)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in held:
+            df.unpersist()
 
 
 def rotating_persist(
@@ -50,8 +75,9 @@ def rotating_persist(
     eager: bool = False,
 ) -> DataFrame:
     """Persist ``df``, releasing the frame the same ``slot`` persisted
-    on the previous invocation in this SparkSession. Returns the
-    persisted ``df``.
+    on the previous invocation in this SparkSession — or, inside a
+    :func:`released_on_exit` scope, hand it to the scope instead.
+    Returns the persisted ``df``.
 
     ``eager=True`` populates the cache with a ``count()`` before
     returning. Use it where the persisted frame feeds MULTIPLE
@@ -61,17 +87,22 @@ def rotating_persist(
     (EAGER_AB_r10.json) measured the single-shot (driver-window) cost
     of lang_shingle_overlap at 12.4 s lazy vs 3.9 s eager under load,
     against a ~0.3 s steady-state premium for the extra pass."""
-    spark = df.sparkSession
-    with _LOCK:
-        slots = _SLOTS.setdefault(spark, {})
-        prev = slots.get(slot)
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass  # session torn down / already released
+    held = _SCOPE.get()
+    if held is not None:
         df = df.persist(storage_level)
-        slots[slot] = df
+        held.append(df)
+    else:
+        spark = df.sparkSession
+        with _LOCK:
+            slots = _SLOTS.setdefault(spark, {})
+            prev = slots.get(slot)
+            if prev is not None:
+                try:
+                    prev.unpersist(blocking=False)
+                except Exception:
+                    pass  # session torn down / already released
+            df = df.persist(storage_level)
+            slots[slot] = df
     if eager:
         df.count()
     return df

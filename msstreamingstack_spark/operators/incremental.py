@@ -191,6 +191,7 @@ def minhash_increment(
     known side excludes the current label, so retries recompute
     identically.
     """
+    from msstreamingstack_spark.caching import released_on_exit
     from msstreamingstack_spark.operators.dedup import (
         BAND_SIZE,
         NUM_HASHES,
@@ -207,15 +208,19 @@ def minhash_increment(
         new_docs = new_docs.withColumnRenamed(id_col, "doc_id")
         id_col = "doc_id"
 
-    # ONE shingle pass for the whole increment, persisted HERE so this
+    # ONE shingle pass for the whole increment, cached HERE so this
     # function owns the release: the in-increment LSH reads it 3-6x and
-    # sig_new reuses it via a semi-join on the kept ids (previously a
-    # second full re-shingle of the kept docs). Without the explicit
-    # unpersist in the finally, continuous ingest (one increment per
-    # micro-batch) accumulated a cached shingle table per batch until
-    # driver GC — a slow memory/disk leak in the long-running mode.
-    sh_all = doc_shingle_hashes(new_docs, text_col=text_col)
-    try:
+    # sig_new reuses it via a semi-join on the kept ids. Counted
+    # (eager) so the LSH verify gate sizes the cached table: a lazy
+    # cache reports Catalyst's unknown-size estimate (~6e18 bytes) and
+    # turned the pair pre-filter on for every increment. The scope
+    # releases the table, and any pairs cache the verify step takes,
+    # when the increment returns — continuous ingest runs one
+    # increment per micro-batch and must not wait for driver GC.
+    with released_on_exit():
+        sh_all = doc_shingle_hashes(
+            new_docs, text_col=text_col, slot="minhash_increment.sh", eager=True
+        )
         # 1. in-increment near-dup (exact-jaccard verified): drop the
         #    non-canonical side of every pair
         in_pairs = (
@@ -298,11 +303,6 @@ def minhash_increment(
             increment_id,
         )
         return fresh, matches
-    finally:
-        # deterministic per-increment release: the store write above is
-        # the last consumer of the cached shingle table; continuous
-        # ingest must not wait for the ContextCleaner
-        sh_all.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -339,9 +339,7 @@ class TransactionalParquetSink:
     def __call__(self, df: DataFrame, batch_id: int) -> None:
         if os.path.exists(self._marker(batch_id)):
             return  # redelivered batch: already fully committed
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.data_dir, f"batch_id={batch_id}")
-        )
+        parquet_append_writer(self.data_dir)(df, batch_id)
         fd = os.open(self._marker(batch_id), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         os.close(fd)
 

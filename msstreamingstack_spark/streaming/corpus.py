@@ -53,6 +53,7 @@ from msstreamingstack_spark.operators.incremental import (
 )
 from msstreamingstack_spark.schemas import DOCUMENTS_SCHEMA
 from msstreamingstack_spark.session import apply_runtime_confs
+from msstreamingstack_spark.sinks.writers import parquet_append_writer
 from msstreamingstack_spark.streaming.pipeline import start_foreach_batch
 
 MIN_TOKENS = 5
@@ -409,6 +410,8 @@ def run_corpus_ingest(
     # checkpoint gets fresh labels and still sees all prior rows as
     # foreign
     run_label = hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
+    write_accepted = parquet_append_writer(accept_dir)
+    write_rejected = parquet_append_writer(reject_dir)
 
     def fan_out(df: DataFrame, batch_id: int) -> None:
         label = f"{run_label}-b{batch_id:09d}"
@@ -441,15 +444,9 @@ def run_corpus_ingest(
                     "doc_id",
                 )
             # batch-id-scoped overwrite, not raw append: foreachBatch is
-            # at-least-once, so a replayed batch must land in the SAME
-            # directory and overwrite itself (idempotent sink — the
-            # parquet_append_writer discipline in sinks/writers.py)
-            accepted.write.mode("overwrite").parquet(
-                os.path.join(accept_dir, f"batch_id={batch_id}")
-            )
-            reduce(DataFrame.unionByName, rejects).write.mode("overwrite").parquet(
-                os.path.join(reject_dir, f"batch_id={batch_id}")
-            )
+            # at-least-once, so a replayed batch overwrites itself
+            write_accepted(accepted, batch_id)
+            write_rejected(reduce(DataFrame.unionByName, rejects), batch_id)
             if compact_every and (batch_id + 1) % compact_every == 0:
                 # in-stream store compaction: fold everything EXCEPT
                 # the current batch's label — the checkpoint may

@@ -53,6 +53,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from msstreamingstack_spark.sinks.writers import parquet_append_writer
+from msstreamingstack_spark.streaming.stateful import group_rows
+
 HOUR_SEC = 3600
 _MICRO = Decimal("0.000001")
 
@@ -89,14 +92,11 @@ def _make_cusum_fn(refs: dict[str, tuple[int, int, int]]):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        rows = group_rows(pdfs, ["ts_sec", "event_id"])
+        if rows is None:
             return
         et = str(key[0])
         mu, slack, h = refs.get(et, (0, 0, 0))
-        rows = pd.concat(chunks, ignore_index=True).sort_values(
-            ["ts_sec", "event_id"]
-        )
         if state.exists:
             cur_hour, cur_n, cur_xi, s_run, n_late = (
                 int(state.get[0]),
@@ -185,21 +185,18 @@ def run_cusum_stream(
     max_files_per_trigger: int = 1,
 ):
     """Launch the monitor; each micro-batch appends its closed hours
-    under ``batch_id=<n>`` (idempotent replay — the corpus-ingest
-    sink discipline). Returns the StreamingQuery."""
-    import os
-
+    under ``batch_id=<n>`` (idempotent replay — sinks/writers.py::
+    parquet_append_writer). Returns the StreamingQuery."""
     from msstreamingstack_spark.streaming.pipeline import (
         read_event_stream,
         start_foreach_batch,
     )
 
     events = read_event_stream(spark, source_path, max_files_per_trigger)
-    monitored = cusum_monitor(events, refs)
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    return start_foreach_batch(monitored, checkpoint_dir, sink, "update", available_now)
+    return start_foreach_batch(
+        cusum_monitor(events, refs),
+        checkpoint_dir,
+        parquet_append_writer(out_dir),
+        "update",
+        available_now,
+    )

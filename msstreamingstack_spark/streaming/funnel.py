@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from msstreamingstack_spark.streaming.stateful import group_rows
+
 STATE_SCHEMA = T.StructType(
     [
         T.StructField("s", T.LongType()),
@@ -66,26 +68,22 @@ def _funnel_fn(
     (user_id,) = key
     s, v, p = state.get if state.exists else (None, None, None)
 
-    # Accumulate ALL chunks before sorting: applyInPandasWithState
-    # delivers a group's micro-batch as multiple Arrow chunks (default
-    # 10k rows) in arbitrary order, so a per-chunk sort would run the
-    # state machine out of (ts_sec, prio, event_id) order for any user
-    # whose batch spans a chunk boundary. One global sort restores the
-    # exact-parity contract with the batch funnel_conversion query.
-    chunks = []
-    for pdf in pdfs:
-        sub = pdf[pdf["event_type"].isin(_STAGE_PRIO)]
-        if len(sub):
-            chunks.append(sub[["ts_sec", "event_type", "event_id"]])
-    rows = []
-    if chunks:
-        allrows = pd.concat(chunks, ignore_index=True)
-        allrows = allrows.assign(_prio=allrows["event_type"].map(_STAGE_PRIO))
-        rows = list(
-            allrows.sort_values(["ts_sec", "_prio", "event_id"])[
-                ["ts_sec", "event_type"]
-            ].itertuples(index=False, name=None)
-        )
+    # one global (ts_sec, prio, event_id) order across the group's
+    # chunks keeps exact parity with the batch funnel_conversion query
+    milestones = group_rows(
+        (
+            pdf[pdf["event_type"].isin(_STAGE_PRIO)].assign(
+                _prio=lambda d: d["event_type"].map(_STAGE_PRIO)
+            )
+            for pdf in pdfs
+        ),
+        ["ts_sec", "_prio", "event_id"],
+    )
+    rows = (
+        []
+        if milestones is None
+        else milestones[["ts_sec", "event_type"]].itertuples(index=False, name=None)
+    )
 
     changed = False
     for ts, et in rows:

@@ -47,6 +47,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from msstreamingstack_spark.sinks.writers import parquet_append_writer
+from msstreamingstack_spark.streaming.stateful import group_rows
+
 HH_BUCKETS = 32
 HH_CAPACITY = 8
 
@@ -75,10 +78,9 @@ def _make_hh_fn(capacity: int):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        rows = group_rows(pdfs, "event_id")
+        if rows is None:
             return
-        rows = pd.concat(chunks, ignore_index=True).sort_values("event_id")
         if state.exists:
             keys, counts, errs, n_seen = (
                 list(state.get[0]),
@@ -172,10 +174,9 @@ def run_heavy_hitters_stream(
     max_files_per_trigger: int = 1,
 ):
     """Launch the sketch stream; each micro-batch overwrites
-    ``batch_id=<n>`` with that batch's top-k (idempotent replay, the
-    corpus-ingest sink discipline). Returns the StreamingQuery."""
-    import os
-
+    ``batch_id=<n>`` with that batch's top-k (idempotent replay,
+    sinks/writers.py::parquet_append_writer). Returns the
+    StreamingQuery."""
     from msstreamingstack_spark.streaming.pipeline import (
         read_event_stream,
         start_foreach_batch,
@@ -183,10 +184,9 @@ def run_heavy_hitters_stream(
 
     events = read_event_stream(spark, source_path, max_files_per_trigger)
     sketches = bucketed_sketches(events, key_col, n_buckets, capacity)
+    write = parquet_append_writer(out_dir)
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        top_k(df, k).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
+        write(top_k(df, k), batch_id)
 
     return start_foreach_batch(sketches, checkpoint_dir, sink, "update", available_now)

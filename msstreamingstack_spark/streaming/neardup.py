@@ -79,6 +79,8 @@ from msstreamingstack_spark.operators.dedup import (
     MOD_HASH,
     NUM_HASHES,
 )
+from msstreamingstack_spark.sinks.writers import parquet_append_writer
+from msstreamingstack_spark.streaming.stateful import group_rows
 
 SIG_MATCH_MIN = 13  # >= 13/16 matching components ~ est jaccard >= 0.8
 
@@ -246,12 +248,11 @@ def _make_bucket_fn(ttl_ms: int | None, k_occupants: int = K_OCCUPANTS):
         if state.hasTimedOut:
             state.remove()
             return
-        # all chunks first, ONE deterministic order (doc_id): chunk
-        # boundaries must not affect who claims the bucket
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
+        # ONE deterministic order (doc_id): chunk boundaries must not
+        # affect who claims the bucket
+        rows = group_rows(pdfs, "doc_id")
+        if rows is None:
             return
-        rows = pd.concat(chunks, ignore_index=True).sort_values("doc_id")
         if state.exists:
             occupants = list(state.get[0])
             flat = list(state.get[1])
@@ -358,8 +359,6 @@ def run_neardup_stream(
     parquet per micro-batch (idempotent batch_id-scoped overwrite).
     Continuous mode (``available_now=False``) defaults the bucket-state
     TTL on; drain mode leaves it off (see bucket_verdicts)."""
-    import os
-
     from msstreamingstack_spark.streaming.corpus import read_document_stream
     from msstreamingstack_spark.streaming.pipeline import start_foreach_batch
 
@@ -369,11 +368,10 @@ def run_neardup_stream(
         spark, source_path, max_files_per_trigger
     ).select("doc_id", "text")
     verdicts = bucket_verdicts(docs, state_ttl_ms=state_ttl_ms)
+    write = parquet_append_writer(out_dir)
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        flag_neardups(df).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
+        write(flag_neardups(df), batch_id)
 
     return start_foreach_batch(verdicts, checkpoint_dir, sink, "append", available_now)
 

@@ -61,18 +61,21 @@ INIT_EVENT_TYPE = "signup"  # force-splits a session
 PURCHASE_EVENT_TYPE = "purchase"  # moves the cart carry
 
 
-def _events_in_order(pdfs: Iterator[pd.DataFrame]) -> Iterator[Any]:
-    """A group's events of one micro-batch as rows in (ts_sec,
-    event_id) order. A group larger than
+def group_rows(
+    pdfs: Iterator[pd.DataFrame], by: str | list[str]
+) -> pd.DataFrame | None:
+    """A group's rows of one micro-batch as ONE frame sorted by ``by``,
+    or None when the group brought no rows — the ordering contract of
+    every Python state function in ``streaming/``. A group larger than
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` arrives as several
     Arrow chunks in arbitrary order, so the chunks are concatenated and
-    sorted ONCE — a per-chunk sort would make session boundaries depend
-    on chunk boundaries (the streaming/tws.py rule)."""
+    sorted ONCE: a per-chunk sort would make the state transitions
+    depend on chunk boundaries."""
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if not chunks:
-        return iter(())
+        return None
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    return pdf.sort_values(["ts_sec", "event_id"]).itertuples(index=False)
+    return pdf.sort_values(by)
 
 
 def make_session_fn(gap_sec: int = DEFAULT_GAP_SEC):
@@ -102,7 +105,8 @@ def make_session_fn(gap_sec: int = DEFAULT_GAP_SEC):
             new_user = True
 
         out_rows: list[dict] = []
-        for r in _events_in_order(pdfs):
+        events = group_rows(pdfs, ["ts_sec", "event_id"])
+        for r in () if events is None else events.itertuples(index=False):
             ts = int(r.ts_sec)
             split = (
                 last_ts is None
@@ -236,7 +240,8 @@ def make_rollup_fn(gap_sec: int = DEFAULT_GAP_SEC):
             n, sv = 0, 0.0
 
         out = []
-        for r in _events_in_order(pdfs):
+        events = group_rows(pdfs, ["ts_sec", "event_id"])
+        for r in () if events is None else events.itertuples(index=False):
             ts = int(r.ts_sec)
             if lt is not None and (ts - lt) > gap_sec:
                 out.append(

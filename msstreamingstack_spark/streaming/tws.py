@@ -46,6 +46,9 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from msstreamingstack_spark.streaming.stateful import group_rows
+
+
 def tws_available() -> bool:
     """transformWithState's Python runner speaks protobuf to the JVM;
     without a working google.protobuf the runner crashes at init.
@@ -88,15 +91,10 @@ class UserStateProcessor(StatefulProcessor):
             last_ts, last_et, last_pv, total_dec, n = (
                 None, None, None, Decimal("0.000000"), 0,
             )
-        # accumulate ALL Arrow chunks, then ONE global sort: chunks
-        # arrive in arbitrary order, so a per-chunk sort would make
-        # last_ts/last_event_type depend on chunk boundaries (the
-        # total is order-free, the carried last_* columns are not)
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            allrows = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts_sec", "event_id"]
-            )
+        # one (ts_sec, event_id) order across the group's chunks: the
+        # total is order-free, the carried last_* columns are not
+        allrows = group_rows(rows, ["ts_sec", "event_id"])
+        if allrows is not None:
             for ts, et, val in zip(
                 allrows["ts_sec"], allrows["event_type"], allrows["value"]
             ):

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -60,11 +61,25 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 # instead of setting it on the session: a leaked ``dynamic`` silently
 # turns every later static overwrite into a dynamic one; a leaked Arrow
 # chunk size re-chunks every later pandas UDF.
+ARROW_CHUNK_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 GUARDED_CONFS = (
     "spark.sql.sources.partitionOverwriteMode",
-    "spark.sql.execution.arrow.maxRecordsPerBatch",
+    ARROW_CHUNK_CONF,
 )
 _CONF_BASELINE: dict[str, str] = {}  # recorded when the session starts
+
+
+@contextmanager
+def arrow_chunk_size(spark, n: int):
+    """Run the block with pandas UDF input cut into Arrow chunks of at
+    most ``n`` rows, so one group spans several chunks; restores the
+    previous size on exit."""
+    prev = spark.conf.get(ARROW_CHUNK_CONF)
+    spark.conf.set(ARROW_CHUNK_CONF, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(ARROW_CHUNK_CONF, prev)
 
 
 @pytest.fixture(autouse=True)

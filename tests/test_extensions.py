@@ -453,6 +453,73 @@ def test_minhash_increment_releases_caches(spark, tmp_path):
     assert not (persistent_ids() - base)
 
 
+def _persistent_rdd_ids(spark) -> set:
+    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def test_minhash_increment_verify_gate_reads_cached_size(spark, tmp_path, monkeypatch):
+    """The in-increment LSH's verify pre-filter gate must size the
+    increment's shingle table from its cache. A lazy cache reports
+    Catalyst's unknown-size estimate (~6e18 bytes), which opened the
+    gate for every increment, a one-document one included."""
+    import msstreamingstack_spark.operators.dedup as dd
+    from msstreamingstack_spark.operators.incremental import (
+        minhash_increment,
+        release_checkpoint,
+    )
+
+    sizes = []
+    plan_size_bytes = dd._plan_size_bytes
+
+    def spy(df):
+        sizes.append(plan_size_bytes(df))
+        return sizes[-1]
+
+    monkeypatch.setattr(dd, "_plan_size_bytes", spy)
+    text = " ".join(f"w{j} y{j * 7 % 31} z{j % 13}" for j in range(20))
+    f, m = minhash_increment(
+        spark.createDataFrame([(1, text)], ["doc_id", "text"]),
+        str(tmp_path / "store"),
+        "inc0",
+    )
+    release_checkpoint(f, m)
+    assert sizes and max(sizes) < dd.VERIFY_PREFILTER_MIN_BYTES
+
+
+def test_minhash_increment_releases_forced_verify_prefilter(
+    spark, tmp_path, monkeypatch
+):
+    """With the verify pre-filter forced on, the pairs cache it takes
+    belongs to the increment: no session cache slot is filled, and
+    nothing stays persisted beyond the returned frames' checkpoints."""
+    import msstreamingstack_spark.operators.dedup as dd
+    from msstreamingstack_spark.caching import live_slots
+    from msstreamingstack_spark.operators.incremental import (
+        minhash_increment,
+        release_checkpoint,
+    )
+
+    monkeypatch.setattr(dd, "VERIFY_PREFILTER_MIN_BYTES", 1)
+    base = " ".join(
+        f"token{i} word{i * 7 % 41} item{i * 3 % 29}" for i in range(20)
+    )
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " trailing addendum")], ["doc_id", "text"]
+    )
+    slots = {k: id(v) for k, v in live_slots(spark).items()}
+    before = _persistent_rdd_ids(spark)
+    f, m = minhash_increment(docs, str(tmp_path / "store"), "inc0")
+    assert {r["doc_id"] for r in f.collect()} == {1}  # 2 is a near-dup of 1
+    assert {k: id(v) for k, v in live_slots(spark).items()} == slots
+    assert len(_persistent_rdd_ids(spark) - before) == 2
+    release_checkpoint(f, m)
+    assert not (_persistent_rdd_ids(spark) - before)
+
+
 @pytest.mark.slow
 def test_embedding_increment_semantic_dedup(spark, tmp_path):
     """Semantic dedup across increments: a near-identical embedding in

@@ -20,6 +20,7 @@ from msstreamingstack_spark.operators.sessionize import sessionize
 from msstreamingstack_spark.sinks.writers import CollectingSink
 from msstreamingstack_spark.sources.tables import events_with_time
 from msstreamingstack_spark.streaming.pipeline import run_pipeline
+from tests.conftest import arrow_chunk_size
 
 SF = "/root/testdata/sf0.001"
 
@@ -292,8 +293,8 @@ def test_transform_with_state_user_table(spark, staged_stream_dir, tmp_path):
     exactly the google.protobuf reason, and the processor must still
     pass a multi-chunk contract run (chunk-order independence of the
     carried last_* state) — the semantics the e2e would exercise,
-    protobuf-free. The applyInPandasWithState twin
-    (test_user_state_stream_matches_batch) carries the runtime
+    protobuf-free. The applyInPandasWithState sessionizer
+    (test_stream_matches_batch_sessionizer) carries the runtime
     evidence for per-user state on Spark-managed state stores."""
     from msstreamingstack_spark.streaming.pipeline import (
         read_event_stream,
@@ -729,15 +730,10 @@ def test_sessionizer_sorts_across_arrow_chunks(spark, tmp_path):
     )
     pq.write_table(pa.Table.from_pandas(rows, preserve_index=False), src / "p.parquet")
 
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    try:
+    with arrow_chunk_size(spark, 2):
         sink = CollectingSink()
         q = run_pipeline(spark, str(src), str(tmp_path / "cp"), [sink])
         q.awaitTermination(120)
-    finally:
-        spark.conf.set(key, prev)
     got = {r["event_id"]: r["session_id"] for r in sink.rows}
     ev = spark.createDataFrame(
         [(int(r.event_id), int(r.ts) // 10**9) for r in rows.itertuples()],

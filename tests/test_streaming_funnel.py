@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from msstreamingstack_spark.sources.tables import events_with_time
 from msstreamingstack_spark.streaming.funnel import funnel_stream
 from msstreamingstack_spark.streaming.pipeline import read_event_stream
+from tests.conftest import arrow_chunk_size
 
 SF = "/root/testdata/sf0.001"
 
@@ -121,9 +122,7 @@ def test_multi_chunk_group_sorts_globally(spark, tmp_path):
     )
     pq.write_table(pa.Table.from_pandas(rows, preserve_index=False), src / "p.parquet")
 
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
+    with arrow_chunk_size(spark, 4):
         ev = read_event_stream(spark, str(src))
         out_dir = str(tmp_path / "out.parquet")
         q = (
@@ -136,8 +135,6 @@ def test_multi_chunk_group_sorts_globally(spark, tmp_path):
         )
         q.awaitTermination(120)
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     r = spark.read.parquet(out_dir).orderBy(F.desc("stage")).first()
     # global order: signup@10, first view@20 (>=10), first purchase@21 (>=20)
     assert (r["signup_ts"], r["view_ts"], r["purchase_ts"], r["stage"]) == (
