@@ -181,8 +181,9 @@ def main() -> None:
     # causal stand-in is the plan itself — a query whose physical plan
     # carries >=2 Exchange nodes lives on the shuffle write/read path
     # the shuffle probe exercises, everything else tracks the pure-JVM
-    # CPU probe. Recorded per query so `catalog --audit` normalizes
-    # each row by the right probe instead of by prose. (Formatted
+    # CPU probe. Recorded per query (`probe_affinity`) so a reader of
+    # the payload normalizes each row by the right probe instead of by
+    # prose. (Formatted
     # explain prints each node twice — tree + detail — so 2 physical
     # Exchanges == 4 regex hits; plan_facts counts raw hits.)
     def _probe_affinity(df) -> str:

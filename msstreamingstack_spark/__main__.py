@@ -203,220 +203,33 @@ def _cmd_retain(args: argparse.Namespace) -> int:
     return 0
 
 
-def _audit_rows(rounds_dir: str) -> tuple[dict, dict, dict]:
-    """Scan CORRECTNESS_r*.json / BENCH*.json in ``rounds_dir`` and
-    fold them into per-query audit facts: the latest driver round that
-    checked each query (and its verdict), the latest bench second, and
-    a calib-normalized delta vs the FIRST recorded second — per-query
-    drift with host-speed drift divided out, using the probe the
-    query's plan is affine to (``probe_affinity`` in the bench
-    payload: shuffle-heavy plans normalize by the shuffle probe,
-    pure-JVM plans by the CPU probe; rounds predating a probe fall
-    back to the CPU probe, then to the raw ratio). Pure-file
-    aggregation — lets a judge audit 100+ queries without recomputing
-    the round-union by hand."""
-    import glob
-    import json
-    import os
-    import re
-
-    driver: dict[str, tuple[int, str]] = {}  # name -> (round, verdict)
-    for path in sorted(glob.glob(os.path.join(rounds_dir, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        rnd = int(m.group(1)) if m else -1
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err"):
-                verdict = "error"
-            elif row.get("hash_match"):
-                verdict = "hash-green"
-            elif row.get("rows_match"):
-                verdict = "rows-green"
-            else:
-                verdict = "RED"
-            prev = driver.get(name)
-            if prev is None or rnd >= prev[0]:
-                driver[name] = (rnd, verdict)
-
-    bench: dict[str, float] = {}
-    # Per-file parse (payload shape or driver tail wrapper) into
-    # (queries, calib_sec, shuffle_calib_sec, probe_affinity).
-    def _parse_bench(data) -> tuple[dict, float | None, float | None, dict]:
-        parsed = data.get("parsed")
-        src = parsed if isinstance(parsed, dict) else data
-        rows = (
-            data.get("queries")
-            or (isinstance(parsed, dict) and parsed.get("queries"))
-            or {}
-        )
-        calib = src.get("calib_sec") or data.get("calib_sec")
-        shuf = src.get("shuffle_calib_sec") or data.get("shuffle_calib_sec")
-        aff = src.get("probe_affinity") or data.get("probe_affinity") or {}
-        if not rows and isinstance(data.get("tail"), str):
-            # driver-written BENCH_r*.json wraps the bench stdout as a
-            # HEAD-TRUNCATED "tail" string. Preferred recovery: the
-            # compact last line bench.py now prints is complete JSON —
-            # parse it. Legacy fallback (r04/r05 single-line format):
-            # regex "name":sec pairs, but ONLY inside the queries
-            # object — stop at its closing '}' so scalar fields after
-            # it ("value", "sf", "median_sec"…) can't masquerade as
-            # query timings — and skip a head-cut first pair.
-            tail = data["tail"]
-            for seg in reversed(tail.strip().splitlines()):
-                try:
-                    obj = json.loads(seg)
-                except json.JSONDecodeError:
-                    continue
-                if isinstance(obj, dict) and isinstance(
-                    obj.get("queries"), dict
-                ):
-                    rows = obj["queries"]
-                    calib = calib or obj.get("calib_sec")
-                    shuf = shuf or obj.get("shuffle_calib_sec")
-                    break
-            if not rows:
-                qend = tail.find("}")  # head is cut ⇒ first '}' closes
-                body = tail if qend < 0 else tail[:qend]
-                if not tail[:1] == '"':
-                    # first pair may begin mid-name/mid-value: the
-                    # regex's leading quote skips a cut name, but a
-                    # cut VALUE would still match — drop to the first
-                    # pair that follows a complete ',' boundary
-                    body = body[body.find(",") + 1:]
-                rows = {
-                    m.group(1): float(m.group(2))
-                    for m in re.finditer(
-                        r'"([A-Za-z_][A-Za-z0-9_]{3,})":([0-9]+\.[0-9]+)',
-                        body,
-                    )
-                }
-        return rows, calib, shuf, aff
-
-    # One record per artifact, ascending by round; BENCH.json (the
-    # committed full-registry run) is the CURRENT record.
-    records: list[tuple[dict, float | None, float | None, dict]] = []
-    round_files = sorted(
-        glob.glob(os.path.join(rounds_dir, "BENCH_r*.json")),
-        key=lambda p: (
-            int(m.group(1))
-            if (m := re.search(r"BENCH_r(\d+)", os.path.basename(p)))
-            else -1
-        ),
-    )
-    for path in [*round_files, os.path.join(rounds_dir, "BENCH.json")]:
-        if not os.path.exists(path):
-            continue
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        records.append(_parse_bench(data))
-
-    # latest second per query (newest record wins)
-    for rows, _, _, _ in reversed(records):
-        for name, sec in rows.items():
-            bench.setdefault(name, sec)
-
-    # calib-normalized delta vs the first recorded second
-    norm: dict[str, tuple[str, float]] = {}  # name -> (probe, delta)
-    if records:
-        cur_rows, cur_calib, cur_shuf, cur_aff = records[-1]
-        first: dict[str, tuple[float, float | None, float | None]] = {}
-        for rows, calib, shuf, _ in records[:-1]:
-            for name, sec in rows.items():
-                first.setdefault(name, (sec, calib, shuf))
-        for name, cur_sec in cur_rows.items():
-            if name not in first:
-                continue
-            base_sec, base_calib, base_shuf = first[name]
-            probe = cur_aff.get(name, "cpu")
-            if probe == "shuffle" and base_shuf and cur_shuf:
-                ratio = cur_shuf / base_shuf
-            elif base_calib and cur_calib:
-                probe = "cpu"  # fall back when a probe predates history
-                ratio = cur_calib / base_calib
-            else:
-                probe, ratio = "raw", 1.0
-            if base_sec > 0:
-                norm[name] = (probe, round(cur_sec / base_sec / ratio, 2))
-    return driver, bench, norm
-
-
 def _cmd_catalog(args: argparse.Namespace) -> int:
     """Emit the query catalog as markdown (no Spark session needed) —
     the registry is the driver contract, so this IS the operator
-    inventory. ``--audit`` joins in the recorded driver-correctness
-    rounds and bench seconds per query."""
+    inventory."""
     from msstreamingstack_spark.queries import DRIVER_WINDOW, REGISTRY
 
-    audit = getattr(args, "audit", False)
-    driver, bench, norm = (
-        _audit_rows(getattr(args, "rounds_dir", "."))
-        if audit
-        else ({}, {}, {})
-    )
-
     lines = [
-        "# Query catalog (generated: `python -m msstreamingstack_spark catalog"
-        + (" --audit" if audit else "")
-        + "`)",
+        "# Query catalog (generated: `python -m msstreamingstack_spark catalog`)",
         "",
         f"{len(REGISTRY)} registered queries; "
         f"{sum(1 for s in REGISTRY.values() if s.oracle)} DuckDB-oracled, "
         f"{sum(1 for s in REGISTRY.values() if not s.oracle)} rows-only "
         "(pytest-verified); first 50 form the driver correctness window.",
         "",
+        "| query | tags | oracle | in window | doc |",
+        "|---|---|---|---|---|",
     ]
-    if audit:
-        never = sorted(
-            n for n, s in REGISTRY.items() if s.oracle and n not in driver
-        )
-        lines += [
-            f"Driver-audit union over recorded rounds: {len(driver)} distinct "
-            f"queries driver-checked; "
-            f"{sum(1 for r, v in driver.values() if v == 'hash-green')} latest-"
-            "hash-green; oracled-but-never-driver-checked: "
-            + (", ".join(f"`{n}`" for n in never) if never else "none")
-            + ".",
-            "",
-            "| query | tags | oracle | in window | last driver round | verdict | bench sec | norm Δ vs first (probe) |",
-            "|---|---|---|---|---|---|---|---|",
-        ]
-    else:
-        lines += [
-            "| query | tags | oracle | in window | doc |",
-            "|---|---|---|---|---|",
-        ]
     window = set(DRIVER_WINDOW)
     for name, spec in sorted(REGISTRY.items()):
-        if audit:
-            rnd, verdict = driver.get(name, (None, "never"))
-            sec = bench.get(name)
-            nd = norm.get(name)
-            lines.append(
-                f"| `{name}` | {', '.join(spec.tags)} | "
-                f"{'sql' if spec.oracle else 'rows-only'} | "
-                f"{'yes' if name in window else ''} | "
-                f"{'' if rnd is None else f'r{rnd}'} | {verdict} | "
-                f"{'' if sec is None else f'{sec:.2f}'} | "
-                f"{'' if nd is None else f'{nd[1]:.2f}x ({nd[0]})'} |"
-            )
-        else:
-            doc = " ".join(spec.doc.split()).replace("|", "\\|")
-            if len(doc) > 180:
-                doc = doc[:177] + "..."
-            lines.append(
-                f"| `{name}` | {', '.join(spec.tags)} | "
-                f"{'sql' if spec.oracle else 'rows-only'} | "
-                f"{'yes' if name in window else ''} | {doc} |"
-            )
+        doc = " ".join(spec.doc.split()).replace("|", "\\|")
+        if len(doc) > 180:
+            doc = doc[:177] + "..."
+        lines.append(
+            f"| `{name}` | {', '.join(spec.tags)} | "
+            f"{'sql' if spec.oracle else 'rows-only'} | "
+            f"{'yes' if name in window else ''} | {doc} |"
+        )
     text = "\n".join(lines) + "\n"
     if args.out:
         with open(args.out, "w") as fh:
@@ -1186,11 +999,6 @@ def main(argv: list[str] | None = None) -> int:
 
     ct = sub.add_parser("catalog", help="emit the query catalog as markdown")
     ct.add_argument("--out", default=None, help="write to file instead of stdout")
-    ct.add_argument("--audit", action="store_true",
-                    help="join per-query driver-correctness rounds and "
-                    "bench seconds from CORRECTNESS_r*/BENCH* files")
-    ct.add_argument("--rounds-dir", default=".",
-                    help="directory holding CORRECTNESS_r*.json / BENCH*.json")
     ct.set_defaults(fn=_cmd_catalog)
 
     args = ap.parse_args(argv)

@@ -61,14 +61,6 @@ def fake_decode_image(payload: bytes) -> list[float]:
     ]
 
 
-def real_decode_image(payload: bytes) -> list[float]:  # pragma: no cover
-    """Real decode path — requires PIL/torchvision, absent here."""
-    raise NotImplementedError(
-        "media decoding libraries are not available in this environment; "
-        "inject a decoder via extract_features(decode_fn=...)"
-    )
-
-
 def extract_features(
     media: DataFrame,
     decode_fn: Callable[[bytes], list[float]] = fake_decode_image,

@@ -71,12 +71,6 @@ def stop_count_sql(text_sql: str) -> str:
     )
 
 
-def profile_score(text: Column, words: tuple[str, ...]) -> Column:
-    toks = tokens(text)
-    prof = F.array(*[F.lit(s) for s in words])
-    return F.size(F.filter(toks, lambda x: F.array_contains(prof, x)))
-
-
 def profile_score_sql(text_sql: str, words: tuple[str, ...]) -> str:
     lst = ", ".join(f"'{s}'" for s in words)
     return (

@@ -16,8 +16,9 @@ can never change a result — only its cost.
 
 Crossover model
 ---------------
-``bench_skew.py`` measures each family at two hot-share points
-(uniform, and 0.3 for the key-skew fixtures / 0.6 for the
+The ``SKEW_CROSSOVER_*`` and ``TWINS_r7`` records (written by the
+since-removed ``bench_skew.py``) measure each family at two hot-share
+points (uniform, and 0.3 for the key-skew fixtures / 0.6 for the
 source-dominance fixtures). Runtime is modeled linearly in the hot
 share ``h`` between the two points::
 
@@ -68,8 +69,9 @@ class CrossoverModel:
 
     ``measured_hot`` is the hot share of the skewed fixture the
     numbers come from (0.3 for the key-skew events/orders fixtures,
-    0.6 for the source-dominance documents fixtures —
-    ``bench_skew.py`` HOT_FRAC / DOC_HOT_FRAC). ``extrapolated``
+    0.6 for the source-dominance documents fixtures — the
+    ``SKEW_CROSSOVER_*`` / ``TWINS_r7`` records, written by the
+    since-removed ``bench_skew.py``). ``extrapolated``
     marks transfer models (see module docstring) vs directly
     measured families.
     """

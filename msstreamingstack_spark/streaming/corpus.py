@@ -301,8 +301,8 @@ def run_corpus_ingest(
     per-micro-batch machinery (store anti-join setup, shingle fold
     warm-up, commit) at bench scale, so throughput amortizes almost
     linearly with batch size — 58 → 938 docs/s from 1k to 25k docs
-    per batch, measured in ``bench_ingest_curve.py``
-    (INGEST_CURVE_r8.json). Size ``max_files_per_trigger`` × file
+    per batch, recorded in INGEST_CURVE_r8.json (written by the
+    since-removed ``bench_ingest_curve.py``). Size ``max_files_per_trigger`` × file
     size to put AT LEAST ~10k documents in each micro-batch (93% of
     the machinery amortized at 25k); below ~2.5k docs/batch the
     pipeline spends most of its wall-clock on overhead.

@@ -258,3 +258,32 @@ def test_cli_neardup(spark, tmp_path, capsys):
     assert verdicts[10]["matched_doc"] == 1
     assert verdicts[10]["est_jaccard"] == 1.0
     assert verdicts[1]["is_neardup"] is False
+
+
+def test_catalog_writes_one_row_per_query(tmp_path, monkeypatch, capsys):
+    """catalog renders the registry as a markdown table, one row per
+    query, without a Spark session; the removed --audit flag is now an
+    argparse usage error."""
+    from pyspark.sql import SparkSession
+
+    from msstreamingstack_spark.queries import REGISTRY
+
+    def _no_session(self):
+        raise AssertionError("catalog must not start a Spark session")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", _no_session)
+
+    out = tmp_path / "QUERIES.md"
+    assert main(["catalog", "--out", str(out)]) == 0
+    lines = out.read_text().splitlines()
+    assert lines[0] == (
+        "# Query catalog (generated: `python -m msstreamingstack_spark catalog`)"
+    )
+    for name in REGISTRY:
+        assert sum(ln.startswith(f"| `{name}` | ") for ln in lines) == 1, name
+    assert sum(ln.startswith("| `") for ln in lines) == len(REGISTRY)
+
+    with pytest.raises(SystemExit) as exc:
+        main(["catalog", "--audit"])
+    assert exc.value.code == 2
+    assert "--audit" in capsys.readouterr().err

@@ -107,8 +107,10 @@ class TestHotKeyShareAndDecision:
         )
 
     def _hot30(self, spark):
-        # ~30% of rows on ONE key (bench_skew.py's HOT_FRAC fixture
-        # shape), the regime SKEW_CROSSOVER_r9 measured.
+        # ~30% of rows on ONE key (the HOT_FRAC fixture shape of the
+        # SKEW_CROSSOVER_*/TWINS_r7 records, written by the
+        # since-removed bench_skew.py), the regime SKEW_CROSSOVER_r9
+        # measured.
         return spark.range(4000).select(
             F.when(F.col("id") % 10 < 3, F.lit(0))
             .otherwise(F.col("id"))

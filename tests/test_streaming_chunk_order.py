@@ -5,9 +5,8 @@ Arrow chunks in arbitrary order once the group exceeds
 ``spark.sql.execution.arrow.maxRecordsPerBatch``. Every state function
 must therefore give the same output and the same new state whether the
 rows arrive as one ordered chunk or split into chunks in adverse order
-(streaming/stateful.py::group_rows). The sessionizer, funnel, near-dup
-buckets and transformWithState processor carry their own chunk-order
-tests; this file covers the CUSUM monitor, the heavy-hitter sketch and
+(streaming/stateful.py::group_rows). The sessionizer, funnel and near-dup
+buckets carry their own chunk-order tests; this file covers the CUSUM monitor, the heavy-hitter sketch and
 the session rollup by calling each function directly with a fake
 GroupState.
 """
